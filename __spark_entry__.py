@@ -36,7 +36,13 @@ from rsyslog_spark.functions import (
 from rsyslog_spark.lookup import LookupTable, asof_enrich, enrich_join
 from rsyslog_spark.oracle import ts3164, ts3339, with_parsed_oracle
 from rsyslog_spark.parse import with_parsed
-from rsyslog_spark.pipeline import build_flagship, role_dim_df, tool_dim_df
+from rsyslog_spark.pipeline import (
+    ROLE_DIM,
+    ROLE_SCHEMA,
+    TOOL_DIM,
+    TOOL_SCHEMA,
+    build_flagship,
+)
 from rsyslog_spark.sources.transcripts import transcripts_spark
 from rsyslog_spark.templates import compile_template, resolve_property
 
@@ -178,10 +184,8 @@ def q_propfilt_contains(spark, sf_dir):
 
 def q_enrich_sink_groups(spark, sf_dir):
     p = _parsed(spark, sf_dir)
-    e = enrich_join(p, tool_dim_df(spark), on="tool",
-                    nomatch={"tool_class": "unknown"})
-    e = enrich_join(e, role_dim_df(spark), on="role",
-                    nomatch={"sink_group": "unknown"})
+    e = enrich_join(p, TOOL_DIM, TOOL_SCHEMA, nomatch={"tool_class": "unknown"})
+    e = enrich_join(e, ROLE_DIM, ROLE_SCHEMA, nomatch={"sink_group": "unknown"})
     return e.groupBy("tool_class", "sink_group").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("risk").cast("long")).alias("risk_sum"),

@@ -6,7 +6,7 @@ jjourdin/rsyslog, C) as an idiomatic Spark engine:
 - parse:    RFC3164/RFC5424 syslog parsing as vectorized pandas/Arrow UDFs
             over a transcript `text` column (reference: tools/pmrfc3164.c,
             tools/pmrfc5424.c, runtime/parser.c)
-- enrich:   lookup tables as broadcast hash joins / as-of joins
+- enrich:   lookup tables as literal-map probes / as-of CASE chains
             (reference: runtime/lookup.c)
 - route:    rulesets (filters + stop + set/unset + actions) compiled to
             per-sink Spark SQL predicates — multicast-with-stop algebra

@@ -4,17 +4,17 @@ Reference: runtime/lookup.c (1052 LoC), table types runtime/lookup.h:25-33.
 Tables are small, in-memory, hot-reloadable dimension data; per-table
 ``nomatch`` default (lookup.h:95). The Spark-idiomatic mapping:
 
-- ``string`` (exact hash/bsearch, lookup.c:312-328,448)  -> broadcast
-  hash equi-join (never a shuffle; the dimension fits one executor by
-  construction, like the reference's in-process hash).
+- ``string`` (exact hash/bsearch, lookup.c:312-328,448)  -> literal MAP
+  probe in generated code (``literal_map``; no join, no broadcast).
 - ``array``  (dense uint offset, lookup.c:330-349)        -> same.
 - ``sparseArray`` (largest key <= lookup key, bsearch_lte,
   lookup.c:351-389) -> AS-OF lookup. Spark has no native as-of join; for
   the (tiny dim) x (huge fact) shape the right plan is NOT a range join
-  (O(n*m) blowup) but a broadcast CASE/array binary search — we compile
-  the sorted boundaries into a constant ``width_bucket``-style expression
-  so the probe stays in whole-stage codegen with zero shuffle.
+  (O(n*m) blowup) but a constant CASE chain — we compile the sorted
+  boundaries into a ``width_bucket``-style expression so the probe stays
+  in whole-stage codegen with zero shuffle.
 - ``stubbed`` (lookup.h:28, lookupKey_stub :306-309)      -> lit(stub).
+- multi-column dimensions (``enrich_join``) -> the same literal MAP.
 
 ``lookup(name, key)`` function semantics (rainerscript.c:2486-2528):
 missing table -> "TABLE-NOT-FOUND"; no match -> table's nomatch value.
@@ -25,14 +25,19 @@ at pipeline compile time.
 
 from __future__ import annotations
 
-import bisect
 import json
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import broadcast
 
 TABLE_NOT_FOUND = "TABLE-NOT-FOUND"
+
+
+def literal_map(pairs) -> Column:
+    """Constant MAP from ``(key, value)`` pairs (values may be Columns):
+    the table lives in the plan, as the reference's in-process hash
+    (lookup.c:429-448)."""
+    return F.create_map(*[F.lit(x) for kv in pairs for x in kv])
 
 
 class LookupTable:
@@ -72,22 +77,14 @@ class LookupTable:
     # -- scalar-expression probes (broadcast-free, codegen'd) -------------
 
     def lookup_expr(self, key: Column) -> Column:
-        """Compile ``lookup(name, key)`` into a constant-map probe.
-
-        For small dims this beats even a broadcast join: the table
-        becomes a literal MAP in the plan (the reference interns the
-        strings in-process, lookup.c:429-448 — same locality idea)."""
+        """Compile ``lookup(name, key)`` into a constant-map probe."""
         if self.kind == "stubbed":
             return F.lit(self.stub if self.stub is not None else self.nomatch)
         if self.kind == "sparseArray":
             return self.asof_expr(key)
-        pairs: list[Column] = []
-        for k, v in self.mapping.items():
-            pairs.append(F.lit(str(k)))
-            pairs.append(F.lit(v))
-        if not pairs:
+        if not self.mapping:
             return F.lit(self.nomatch)
-        m = F.create_map(*pairs)
+        m = literal_map((str(k), v) for k, v in self.mapping.items())
         return F.coalesce(
             F.element_at(m, key.cast("string")), F.lit(self.nomatch)
         )
@@ -103,16 +100,6 @@ class LookupTable:
         for kk, vv in zip(self.keys, self.vals):
             expr = F.when(k >= kk, F.lit(vv)).otherwise(expr)
         return expr
-
-    # -- DataFrame form (for dims that are real tables) --------------------
-
-    def as_dataframe(self, spark: SparkSession, key_col: str = "key",
-                     val_col: str = "value") -> DataFrame:
-        if self.kind == "sparseArray":
-            rows = list(zip(self.keys, self.vals))
-            return spark.createDataFrame(rows, f"{key_col} long, {val_col} string")
-        rows = [(str(k), str(v)) for k, v in self.mapping.items()]
-        return spark.createDataFrame(rows, f"{key_col} string, {val_col} string")
 
 
 class LookupRegistry:
@@ -143,19 +130,24 @@ class LookupRegistry:
 
 def enrich_join(
     fact: DataFrame,
-    dim: DataFrame,
-    on: str | list[str],
+    rows: list[tuple],
+    schema: str,
     nomatch: dict[str, str] | None = None,
-    how: str = "left",
 ) -> DataFrame:
-    """Broadcast hash equi-join enrichment for DataFrame-shaped dims.
+    """Left equi-join enrichment by an in-memory dimension, compiled to
+    ONE literal map ``key -> struct(values)``: no scan, broadcast or shuffle.
 
-    This is THE scale path for dimensions too big for a literal map but
-    far smaller than the fact table (tool/role dims at 10^12-turn scale):
-    broadcast() pins a BroadcastHashJoin — zero shuffle of the fact side.
-    ``nomatch`` fills per-column defaults like the reference's per-table
-    nomatch value (lookup.h:95)."""
-    out = fact.join(broadcast(dim), on=on, how=how)
+    ``rows`` are keyed by their first field, which matches the fact column
+    of the same name; ``schema`` is their DDL (``"tool string, tool_class
+    string, risk int"``). Misses are null, then ``nomatch`` fills
+    per-column defaults (the reference's per-table nomatch, lookup.h:95)."""
+    fields = [f.split(None, 1) for f in schema.split(",")]
+    (key, key_type), values = fields[0], fields[1:]
+    probe = F.element_at(literal_map(
+        (F.lit(r[0]).cast(key_type),
+         F.struct(*[F.lit(v).cast(t).alias(n) for v, (n, t) in zip(r[1:], values)]))
+        for r in rows), F.col(key))
+    out = fact.withColumns({n: probe[n] for n, _ in values})
     for col, default in (nomatch or {}).items():
         out = out.withColumn(col, F.coalesce(F.col(col), F.lit(default)))
     return out

@@ -1,7 +1,7 @@
 """The flagship parse -> enrich -> route -> aggregate pipeline.
 
 This is the end-to-end composition mandated by the north rule: transcript
-table -> sanitize/PRI/parser-chain -> broadcast enrichment (tool/role
+table -> sanitize/PRI/parser-chain -> literal-map enrichment (tool/role
 dims) -> ruleset routing (multicast-with-stop, FIXTURES.md §5 config) ->
 fan-out sinks with exact per-sink counts + parse-failure metrics.
 
@@ -19,7 +19,7 @@ runtime/ruleset.c:577-636):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rsyslog_spark.lookup import enrich_join
@@ -27,7 +27,8 @@ from rsyslog_spark.parse import with_parsed
 from rsyslog_spark.route import Action, If, PropFilt, RouteCompiler, Ruleset, Stop
 from rsyslog_spark.sinks import SinkSpec, fan_out
 
-# tool/role dimension data (FIXTURES.md §2-3)
+# tool/role dimension data (FIXTURES.md §2-3), keyed by the first field
+TOOL_SCHEMA = "tool string, tool_class string, risk int"
 TOOL_DIM = [
     ("", "none", 0),
     ("bash", "exec", 3),
@@ -38,20 +39,13 @@ TOOL_DIM = [
     ("fetch", "read", 1),
     ("unused", "none", 0),
 ]
+ROLE_SCHEMA = "role string, sink_group string"
 ROLE_DIM = [
     ("user", "ingress"),
     ("assistant", "egress"),
     ("tool", "exec"),
     ("system", "control"),
 ]
-
-
-def tool_dim_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(TOOL_DIM, "tool string, tool_class string, risk int")
-
-
-def role_dim_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ROLE_DIM, "role string, sink_group string")
 
 
 def flagship_ruleset() -> Ruleset:
@@ -92,18 +86,13 @@ def build_flagship(
     transcripts: DataFrame,
 ) -> tuple[DataFrame, list]:
     """Parse + enrich + compile routing. Returns (annotated, actions)."""
-    spark = transcripts.sparkSession
     # keep_raw=False: no downstream consumer (predicates, templates,
     # sinks) reads rawmsg — the raw text crosses the Arrow boundary
     # once inbound and never comes back (see with_parsed)
     parsed = with_parsed(transcripts, require_header=True, keep_raw=False)
-    enriched = enrich_join(
-        parsed,
-        tool_dim_df(spark),
-        on="tool",
-        nomatch={"tool_class": "unknown", "risk": "0"},
-    )
-    enriched = enrich_join(enriched, role_dim_df(spark), on="role",
+    enriched = enrich_join(parsed, TOOL_DIM, TOOL_SCHEMA,
+                           nomatch={"tool_class": "unknown", "risk": "0"})
+    enriched = enrich_join(enriched, ROLE_DIM, ROLE_SCHEMA,
                            nomatch={"sink_group": "unknown"})
     rc = RouteCompiler().add(flagship_ruleset())
     return rc.compile(enriched, "flagship")

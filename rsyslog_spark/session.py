@@ -25,10 +25,12 @@ def get_spark(
     - Arrow enabled: the parse UDFs move data JVM<->Python in columnar
       batches (reference moves messages in batches of 128, queue.c:1534;
       we move them in Arrow batches of 10k).
-    - Broadcast threshold raised: lookup/dimension tables are always
-      broadcast (reference lookup tables are in-memory hashes, lookup.c).
+    - Broadcast threshold raised for small-side joins (similarity,
+      decontam); lookup tables need none, they are literal maps (lookup.c).
+    - Cores default to the CPUs this process may run on.
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     b = (
         SparkSession.builder.appName(app_name)

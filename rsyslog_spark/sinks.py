@@ -55,6 +55,30 @@ DEFAULT_SINK_COLUMNS = [
 ]
 
 
+def sink_counts(
+    annotated: DataFrame, actions: list[CompiledAction]
+) -> dict[str, int]:
+    """Exact per-sink counts (0 included) in ONE aggregation pass per
+    plane — the reference's per-action counters (runtime/statsobj.c).
+    Row-plane actions aggregate over ``annotated``; foreach-body actions
+    over their own exploded frame."""
+    counts: dict[str, int] = {}
+    planes: dict[int, tuple[DataFrame, list[CompiledAction]]] = {}
+    for a in actions:
+        src = a.df if a.df is not None else annotated
+        planes.setdefault(id(src), (src, []))[1].append(a)
+    for src, acts in planes.values():
+        agg = src.agg(
+            *[
+                F.sum(F.col(a.pred_col).cast("long")).alias(f"{i}")
+                for i, a in enumerate(acts)
+            ]
+        ).first()
+        for i, a in enumerate(acts):
+            counts[a.sink] = counts.get(a.sink, 0) + int(agg[f"{i}"] or 0)
+    return counts
+
+
 def fan_out(
     annotated: DataFrame,
     actions: list[CompiledAction],
@@ -62,33 +86,12 @@ def fan_out(
     sink_specs: dict[str, SinkSpec] | None = None,
     write: bool = True,
 ) -> dict[str, int]:
-    """Write every action's rows to its sink table; return per-sink counts.
-
-    Counts come from a single aggregation job (one pass), mirroring the
-    reference's per-action counters (statsobj, runtime/statsobj.c) but
-    exact-per-batch instead of sampled.
-    """
+    """Write every action's rows to its sink table; return per-sink counts
+    (``sink_counts``: one aggregation pass)."""
     sink_specs = sink_specs or {}
     annotated = annotated.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        # one-pass exact per-sink counts (per plane: row-plane actions
-        # aggregate over `annotated`; foreach-body actions carry their
-        # own exploded frame — one aggregation pass per distinct plane)
-        counts: dict[str, int] = {}
-        planes: dict[int, tuple[DataFrame, list[CompiledAction]]] = {}
-        for a in actions:
-            src = a.df if a.df is not None else annotated
-            planes.setdefault(id(src), (src, []))[1].append(a)
-        for src, acts in planes.values():
-            agg = src.agg(
-                *[
-                    F.sum(F.col(a.pred_col).cast("long")).alias(f"{i}")
-                    for i, a in enumerate(acts)
-                ]
-            ).first()
-            for i, a in enumerate(acts):
-                counts[a.sink] = counts.get(a.sink, 0) + int(agg[f"{i}"] or 0)
-
+        counts = sink_counts(annotated, actions)
         if write:
             for a in actions:
                 spec = sink_specs.get(a.sink, SinkSpec(a.sink))

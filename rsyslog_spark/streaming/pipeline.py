@@ -14,6 +14,8 @@ checkpoint not yet committed) overwrites its own partitions instead of
 appending duplicates — replay + idempotent write = effective
 exactly-once for the sink tables; the streaming checkpoint (WAL +
 offsets) plays the role of the disk queue's .qi file (queue.c:176).
+Per batch: one counting pass for all sinks (``sinks.sink_counts``), one
+write per sink, one write of the ``metrics`` rows (a literal relation).
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ from pyspark.sql import functions as F
 
 from rsyslog_spark.pipeline import build_flagship
 from rsyslog_spark.schema import TRANSCRIPT_SCHEMA
-from rsyslog_spark.sinks import DEFAULT_SINK_COLUMNS, SinkSpec
+from rsyslog_spark.sinks import DEFAULT_SINK_COLUMNS, SinkSpec, sink_counts
 
 
 def read_transcript_stream(
@@ -55,14 +57,13 @@ def stream_flagship(
         annotated, actions = build_flagship(batch_df)
         annotated = annotated.persist()
         try:
-            rows = []
+            counts = sink_counts(annotated, actions)
             for a in actions:
                 out = annotated.filter(F.col(a.pred_col))
                 spec = (sink_specs or {}).get(a.sink, SinkSpec(a.sink))
                 cols = [
                     c for c in DEFAULT_SINK_COLUMNS if c in out.columns
                 ]
-                n = out.count()
                 # batch_id partition + dynamic overwrite = idempotent
                 # replay (a re-run batch replaces exactly its own data)
                 w = (
@@ -74,11 +75,12 @@ def stream_flagship(
                     .partitionBy("batch_id", *spec.partition_by)
                 )
                 w.save(f"{base_path}/{a.sink}")
-                rows.append((batch_id, a.sink, n))
-            spark = batch_df.sparkSession
-            spark.createDataFrame(
-                rows, "batch_id long, sink string, n long"
-            ).write.mode("overwrite").option(
+            # (batch_id, sink, n) per sink as a literal relation: no Python job
+            rows = F.inline(F.array(*[F.struct(
+                F.lit(batch_id).cast("long").alias("batch_id"),
+                F.lit(sink).alias("sink"), F.lit(n).cast("long").alias("n"))
+                for sink, n in counts.items()]))
+            batch_df.sparkSession.range(1).select(rows).write.mode("overwrite").option(
                 "partitionOverwriteMode", "dynamic"
             ).partitionBy("batch_id").parquet(f"{base_path}/metrics")
         finally:

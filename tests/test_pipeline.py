@@ -187,11 +187,22 @@ class TestFlagshipPlanShape:
             *[F.sum(F.col(a.pred_col).cast("long")) for a in actions],
         )
         plan = agg._jdf.queryExecution().executedPlan().toString()
-        # one Arrow crossing, broadcast-only joins, no quadratic shapes
+        # one Arrow crossing, no joins (the tool/role dims are literal-map
+        # probes), no quadratic shapes
         assert plan.count("MapInArrow") == 1
-        assert plan.count("BroadcastHashJoin") == 2
+        assert plan.count("BroadcastHashJoin") == 0
         assert plan.count("SortMergeJoin") == 0
         assert plan.count("CartesianProduct") == 0
         assert plan.count("BroadcastNestedLoopJoin") == 0
         # raw text does not ride back through the barrier on this path
         assert "rawmsg" not in ann.columns
+
+    def test_annotated_plan_has_no_dimension_scan(self, transcripts):
+        """Enrichment adds no broadcast and no Python RDD scan (a
+        dimension built by createDataFrame from a list) to the frame
+        build_flagship returns; the parse stays one MapInArrow."""
+        ann, _ = build_flagship(transcripts)
+        plan = ann._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("BroadcastExchange") == 0
+        assert plan.count("Scan ExistingRDD") == 0
+        assert plan.count("MapInArrow") == 1

@@ -54,6 +54,60 @@ class TestStreamFlagship:
         assert spark.read.parquet(f"{base}/archive").count() == 900
 
 
+def _jobs_per_batch(spark, run_id: str) -> dict[int, int]:
+    """Spark jobs of one streaming query, per micro-batch: the query runs
+    each batch under its run id as job group, with a job description that
+    ends in ``batch = <id>``."""
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    out: dict[int, int] = {}
+    for k in range(jobs.size()):
+        j = jobs.apply(k)
+        group, desc = j.jobGroup(), j.description()
+        if not (group.isDefined() and group.get() == run_id
+                and desc.isDefined()):
+            continue
+        batch = int(desc.get().rsplit("batch = ", 1)[1])
+        out[batch] = out.get(batch, 0) + 1
+    return out
+
+
+class TestStreamBatchCost:
+    def test_jobs_per_batch_and_zero_count_metrics(
+        self, spark, transcripts, tmp_path
+    ):
+        """A micro-batch runs one job per sink write plus a small fixed
+        number (counting pass, metrics write): no per-sink count() jobs,
+        no dimension builds or broadcasts. ``metrics`` keeps one row per
+        sink per batch, n = 0 included."""
+        from rsyslog_spark.pipeline import SINK_SPECS
+
+        src = str(tmp_path / "src")
+        # batch 0 holds only unparseable rows: every other sink gets n = 0
+        bad = F.col("i") % 10 == 9
+        transcripts.filter(bad).coalesce(1).write.parquet(src, mode="append")
+        transcripts.filter(~bad).coalesce(1).write.parquet(src, mode="append")
+        base = str(tmp_path / "sinks")
+        q = stream_flagship(
+            read_transcript_stream(spark, src, max_files_per_trigger=1),
+            base, str(tmp_path / "ckpt"))
+        per_batch = _jobs_per_batch(spark, str(q.runId))
+        assert sorted(per_batch) == [0, 1]
+        assert max(per_batch.values()) <= len(SINK_SPECS) + 4, per_batch
+
+        got = {
+            (r["batch_id"], r["sink"]): r["n"]
+            for r in spark.read.parquet(f"{base}/metrics").collect()
+        }
+        assert sorted(got) == sorted(
+            (b, s) for b in (0, 1) for s in SINK_SPECS)
+        assert got[(0, "parse_errors")] == 100
+        assert got[(0, "archive")] == 0
+        assert got[(1, "parse_errors")] == 0
+        assert got[(1, "archive")] == 900
+        assert sum(got.values()) == sum(
+            spark.read.parquet(f"{base}/{s}").count() for s in SINK_SPECS)
+
+
 class TestStatefulRepeat:
     def test_runs_collapse_across_batches(self, spark, tmp_path):
         d = tmp_path / "src"
